@@ -64,9 +64,12 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       // parse + analysis failures (ParseException extends AnalysisException)
       // → typed contract naming the statement, the parity point with the
       // reference's TrinoAggregateException
-      // (TrinoClientIntegrationTests.cs:126-132)
+      // (TrinoClientIntegrationTests.cs:126-132). Debug level: the caller
+      // gets the error, and some catch it on purpose (a probe that a
+      // detached table is hidden), so a stack trace here is noise.
       case e: org.apache.spark.sql.AnalysisException =>
-        graft.logging.Log.error(log, e, "Statement failed to parse/analyze: {0}", stmt.text)
+        graft.logging.Log.debug(log, "Statement failed to parse/analyze: {0}: {1}",
+          stmt.text, e.getMessage)
         throw new GraftQueryException(stmt.text, "SQL failed to parse/analyze", e)
     }
 
@@ -102,7 +105,9 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     * (Scripts/create/01-schema.sql, 02-tables.sql via ExecuteNonQuery,
     * TrinoIcebergStack.cs:152-197). INSERT INTO catalog tables commits a
     * snapshot and returns rows affected (S5: Scripts/insert/
-    * 01-test-data.sql); -1 when the row count is unknown.
+    * 01-test-data.sql), read from the footers of the files the commit
+    * wrote — the write is the statement's one Spark job, and a `VALUES`
+    * batch lands as one data file; -1 when the row count is unknown.
     */
   def executeNonQuery(stmt: SqlStatement): Long =
     trySession(stmt.text).getOrElse(
@@ -705,7 +710,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
             s"Branch $branchName does not exist on $schemaName.$tableName")
         val src =
           if (source.trim.toUpperCase.startsWith("VALUES"))
-            spark.sql(s"SELECT * FROM ${source.stripSuffix(";")}")
+            valuesSource(source.trim.drop("VALUES".length))
           else query(SqlStatement(source.stripSuffix(";")))
         Some(commitInsert(schemaName, tableName, src,
           catalog.branch(branchName)))
@@ -714,8 +719,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
       // an unqualified name resolves against the session schema
       val schemaName = Option(schemaName0).getOrElse(sessionSchema)
       if (catalog.tableExists(schemaName, tableName))
-        Some(commitInsert(schemaName, tableName,
-          spark.sql(s"SELECT * FROM VALUES ${values.stripSuffix(";")}")))
+        Some(commitInsert(schemaName, tableName, valuesSource(values)))
       else None
     case insertSelectRe(schemaName0, tableName, select) =>
       val schemaName = Option(schemaName0).getOrElse(sessionSchema)
@@ -727,8 +731,16 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     case _ => None
   }
 
+  /** Literal `VALUES` rows as one partition: the batch is driver-resident,
+    * and split over tasks it would land as one tiny file per task.
+    */
+  private def valuesSource(values: String): DataFrame =
+    spark.sql(s"SELECT * FROM VALUES ${values.stripSuffix(";")}").coalesce(1)
+
   /** Cast a source frame positionally to the table's declared schema and
-    * commit it as one snapshot; returns rows affected.
+    * commit it as one snapshot; returns rows affected, read from the
+    * footers of the committed files. The write is the statement's only
+    * evaluation of `raw`, so the count is what the snapshot holds.
     */
   private def commitInsert(schemaName: String, tableName: String,
                            raw: DataFrame,
@@ -740,9 +752,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: String) {
     val cast = raw.select(declared.fields.zipWithIndex.map { case (f, i) =>
       org.apache.spark.sql.functions.col(raw.columns(i)).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-    val n = cast.count()
-    cat.insert(schemaName, tableName, cast)
-    n
+    cat.append(schemaName, tableName, cast).rows
   }
 
   /** Run a multi-statement SQL script exactly the way the reference's

@@ -46,6 +46,12 @@ final case class Snapshot(snapshotId: Long, committedAtMillis: Long, dirs: Seq[S
 final case class EqDelete(path: String, keys: Seq[String], appliesTo: Long,
                           rows: Long = -1L)
 
+/** What an append commit published: its snapshot and the rows it added,
+  * summed from the record counts in the footers of the files it wrote (0
+  * when an idempotent writer's replay skips the commit).
+  */
+final case class Appended(snapshot: Snapshot, rows: Long)
+
 /** A commit lost the optimistic-concurrency race: another writer advanced
   * the table's commit-log generation between this writer's read and its
   * commit attempt. The table state is untouched by the loser — retry from
@@ -3254,12 +3260,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   /** CTAS (S4): create + single snapshot from a query result; returns the
     * row count, like the reference's CTAS row-count contract
-    * (AthenaClient.cs:152-160).
+    * (AthenaClient.cs:152-160) — the rows the append committed, from its
+    * files' footers, not a re-scan of the new table.
     */
   def createTableAs(schema: String, table: String, df: DataFrame): Long = {
     createTable(schema, table, df.schema)
-    insert(schema, table, df)
-    readLatest(schema, table).count()
+    append(schema, table, df).rows
   }
 
   /** `CREATE OR REPLACE TABLE t AS …` (Trino Iceberg's atomic replace):
@@ -3322,6 +3328,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   /** INSERT INTO: write a new snap dir, append a commit. Commit timestamps
     * are strictly monotonic so `FOR TIMESTAMP AS OF` between two commits is
     * well-defined even for sub-millisecond commit spacing (SURVEY.md §7.3).
+    * [[append]] is the same commit, also returning rows affected from the
+    * committed files' footers. Each task of `df` writes its own file, so
+    * a caller that wants one file hands in one partition.
     *
     * `txn = Some((appId, version))` makes the write IDEMPOTENT: if any
     * commit already records `appId` at a version >= `version`, the insert
@@ -3334,11 +3343,20 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * generation CAS, retries, and then observes the recorded version.
     */
   def insert(schema: String, table: String, df: DataFrame,
-             txn: Option[(String, Long)] = None): Snapshot = synchronized {
+             txn: Option[(String, Long)] = None): Snapshot =
+    append(schema, table, df, txn).snapshot
+
+  /** [[insert]], also returning the rows the commit added. The count comes
+    * from the footers of the files this commit wrote, which the manifest
+    * entries read anyway, so `df` is evaluated once — by the write — and
+    * the count is what was committed even when `df` is non-deterministic.
+    */
+  def append(schema: String, table: String, df: DataFrame,
+             txn: Option[(String, Long)] = None): Appended = synchronized {
     val dir = tableDir(schema, table)
     require(tableExists(schema, table), s"Table $schema.$table does not exist")
     val (commits, gen) = readCommitsWithGen(schema, table)
-    for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return seen
+    for ((app, v) <- txn; seen <- txnSeen(commits, app, v)) return Appended(seen, 0L)
     val id = commits.lastOption.map(_.snapshotId).getOrElse(0L) + 1
     val at = math.max(System.currentTimeMillis(),
       commits.lastOption.map(_.committedAtMillis + 1).getOrElse(0L))
@@ -3359,7 +3377,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       commits.lastOption.map(_.deletes).getOrElse(Nil), Some(ml), txn,
       commits.lastOption.map(_.eqDeletes).getOrElse(Nil))
     writeCommits(schema, table, commits :+ snap, gen)
-    snap
+    Appended(snap, newEntries.map(_.rows).sum)
   }
 
   /** Keyed UPSERT via equality deletes (Iceberg v2's streaming-writer

@@ -121,6 +121,54 @@ class GraftEngineSpec extends SparkSpec {
     assert(rows == Seq((1, "Alice"), (2, "Bo'b"), (3, "Carol")))
   }
 
+  test("INSERT … VALUES runs one Spark job, returns its row count and adds one data file") {
+    val e = new GraftEngine(spark, tmpDir("engine-ins-jobs"))
+    e.executeNonQuery(sql"CREATE TABLE demo.t (id bigint, name varchar)")
+    def files: Long = e.queryScalar[Long](sql"""SELECT count(*) FROM demo."t$$files"""").get
+    e.executeNonQuery(sql"INSERT INTO demo.t VALUES (0, 'z')")
+    val before = files
+    val (n, jobs) = withJobCount(e.executeNonQuery(
+      sql"INSERT INTO demo.t VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd'), (5, 'e')"))
+    assert(n == 5L)
+    assert(jobs == 1, s"INSERT … VALUES ran $jobs Spark jobs")
+    assert(files - before == 1L)
+    assert(e.catalog.readLatest("demo", "t").count() == 6L)
+  }
+
+  test("rows affected come from the commit: empty SELECT, CTAS, non-deterministic source, replay") {
+    val e = new GraftEngine(spark, tmpDir("engine-ins-counts"))
+    assert(e.executeNonQuery(
+      sql"CREATE TABLE demo.src AS SELECT id, CAST(id AS STRING) AS name FROM range(200)") == 200L)
+    e.executeNonQuery(sql"CREATE TABLE demo.t (id bigint, name varchar)")
+    assert(e.executeNonQuery(sql"INSERT INTO demo.t SELECT * FROM demo.src WHERE id < 0") == 0L)
+    assert(e.catalog.readLatest("demo", "t").count() == 0L)
+    // the count is what the new snapshot added, whatever a second
+    // evaluation of the source would have produced
+    val n = e.executeNonQuery(sql"INSERT INTO demo.t SELECT * FROM demo.src WHERE rand() < 0.5")
+    val Seq(prev, head) = e.catalog.snapshots("demo", "t").takeRight(2).map(_.snapshotId)
+    def rowsAt(v: Long): Long =
+      e.queryScalar[Long](graft.params.SqlStatement(
+        s"SELECT count(*) FROM demo.t FOR VERSION AS OF $v")).get
+    assert(n == rowsAt(head) - rowsAt(prev))
+    // an idempotent writer's replay commits nothing and adds no rows
+    val batch = Seq((900L, "x")).toDF("id", "name")
+    val first = e.catalog.append("demo", "t", batch, Some(("app", 1L)))
+    val replay = e.catalog.append("demo", "t", batch, Some(("app", 1L)))
+    assert(first.rows == 1L)
+    assert(replay == first.copy(rows = 0L))
+  }
+
+  test("an INSERT whose cast fails under ANSI throws and publishes no snapshot") {
+    assume(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val e = new GraftEngine(spark, tmpDir("engine-ins-ansi"))
+    e.executeNonQuery(sql"CREATE TABLE demo.t (id int)")
+    e.executeNonQuery(sql"INSERT INTO demo.t VALUES (1), (2)")
+    intercept[Exception](e.executeNonQuery(
+      graft.params.SqlStatement("INSERT INTO demo.t VALUES ('3'), ('four')")))
+    assert(e.catalog.snapshots("demo", "t").size == 1)
+    assert(e.catalog.readLatest("demo", "t").as[Int].collect().sorted.toSeq == Seq(1, 2))
+  }
+
   test("unload through the engine (C4)") {
     val target = tmpDir("engine-unload") + "/exp"
     val resp = engine.unload(sql"SELECT id, username FROM shared_data", target)

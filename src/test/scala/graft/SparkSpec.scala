@@ -27,4 +27,23 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and the number of Spark jobs it started, counted by a
+    * listener once the bus has delivered every event.
+    */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val result = body
+      org.apache.spark.SpecBus.drain(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
 }

@@ -79,6 +79,21 @@ class CrashInjectionSpec extends SparkSpec {
     assert(rows(r) == preRows :+ (4L, "d"))
   }
 
+  test("engine INSERT … VALUES: crash after staging leaves the table unchanged") {
+    val wh = tmpDir("crash-eng-ins")
+    val e = new graft.GraftEngine(spark, wh)
+    e.executeNonQuery(graft.params.SqlStatement("CREATE TABLE s.t (id bigint, v varchar)"))
+    e.executeNonQuery(graft.params.SqlStatement(
+      "INSERT INTO s.t VALUES (1, 'a'), (2, 'b'), (3, 'c')"))
+    val insert = graft.params.SqlStatement("INSERT INTO s.t VALUES (4, 'd'), (5, 'e')")
+    crashAt("insert.staged")(e.executeNonQuery(insert))
+    val r = fresh(wh)
+    assert(rows(r) == preRows, "a crashed engine insert must be invisible")
+    assert(r.snapshots("s", "t").size == 1)
+    assert(e.executeNonQuery(insert) == 2L)
+    assert(rows(fresh(wh)) == preRows ++ Seq((4L, "d"), (5L, "e")))
+  }
+
   test("insert: crash after staging the commit-log temp, before the rename") {
     val c = seeded("crash-gen")
     crashAt("commit.staged") {
